@@ -8,8 +8,9 @@ import graft.sinks._
   * (`/root/reference/exporter.go:17-48`): pair a source DataFrame with a
   * codec, then `writeString` (≈ `Write(io.Writer)`) or `writeFile`
   * (single local file, ≈ `WriteFile`). Distributed directory writes go
-  * through each sink's `writeDir` — the scale path the reference's
-  * single-writer design cannot express. */
+  * through the sinks directly — `CsvSink.writeDir`, `JsonSink.writeDir`
+  * (NDJSON), `XmlSink.writeDirFramed` and `HtmlSink.writeDirFramed` —
+  * the scale path the reference's single-writer design cannot express. */
 final case class Exporter(df: DataFrame) {
   def csv(opts: CsvOptions = CsvOptions()): Exporter.Bound =
     new Exporter.Bound(() => CsvSink.writeString(df, opts), p => CsvSink.writeFile(df, p, opts))

@@ -175,12 +175,18 @@ object Render {
                 mappers: Seq[(DataType, Column => Column)] = Nil,
                 ctxMappers: Seq[(DataType, (MapperContext, Column) => Column)] = Nil): DataFrame = {
     val cols = df.schema.fields.map { f =>
-      ctxMappers.collectFirst { case (dt, fn) if dt == f.dataType =>
-          fn(MapperContext(f.name, graft.sources.SourceMeta.driverOf(f)), col(f.name)) }
-        .orElse(mappers.collectFirst { case (dt, fn) if dt == f.dataType => fn(col(f.name)) })
-        .getOrElse(render(col(f.name), f.dataType))
-        .as(f.name)
+      customMapper(f, mappers, ctxMappers).getOrElse(render(col(f.name), f.dataType)).as(f.name)
     }
     df.select(cols.toIndexedSeq: _*)
   }
+
+  /** Field `f` through its custom mapper: the first `ctxMappers` entry
+    * whose DataType matches, else the first matching `mappers` entry;
+    * None when neither matches. */
+  def customMapper(f: StructField,
+                   mappers: Seq[(DataType, Column => Column)],
+                   ctxMappers: Seq[(DataType, (MapperContext, Column) => Column)]): Option[Column] =
+    ctxMappers.collectFirst { case (dt, fn) if dt == f.dataType =>
+        fn(MapperContext(f.name, graft.sources.SourceMeta.driverOf(f)), col(f.name)) }
+      .orElse(mappers.collectFirst { case (dt, fn) if dt == f.dataType => fn(col(f.name)) })
 }

@@ -2,6 +2,8 @@ package graft.sinks
 
 import java.io.{BufferedWriter, FileWriter}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -24,8 +26,33 @@ object SinkTypes {
 }
 import SinkTypes._
 
+/** A codec's whole-document framing: `open`, the kept rows joined by
+  * `sep`, then `close` — or `empty` alone when no row is kept. Both the
+  * driver stream ([[SinkIO.framed]]) and the distributed `graft-framed`
+  * sink ([[graft.sinks.v2.FramedTextSink]]) write a codec from its one
+  * frame. */
+private[sinks] final case class Frame(open: String, sep: String, close: String, empty: String) {
+  /** The frame as `graft-framed` write options. */
+  def options: Map[String, String] =
+    Map("open" -> open, "sep" -> sep, "close" -> close, "empty" -> empty)
+}
+
+private[sinks] object Frame {
+  /** The frame named by `graft-framed` options; a missing option takes
+    * its value from `default`. */
+  def fromOptions(options: java.util.Map[String, String], default: Frame): Frame = {
+    def get(key: String, orElse: String) = Option(options.get(key)).getOrElse(orElse)
+    Frame(get("open", default.open), get("sep", default.sep),
+      get("close", default.close), get("empty", default.empty))
+  }
+}
+
 private[sinks] object SinkIO {
   implicit val stringEnc: Encoder[String] = Encoders.STRING
+
+  /** The first `limit` rows of `df`; a negative limit keeps them all. */
+  def limited(df: DataFrame, limit: Int): DataFrame =
+    if (limit >= 0) df.limit(limit) else df
 
   /** Rendered rows as string arrays; `null` entries are NULL cells. */
   def renderedRows(df: DataFrame, mappers: Mappers,
@@ -38,6 +65,48 @@ private[sinks] object SinkIO {
       Array.tabulate(n)(i => if (row.isNullAt(i)) null else row.getString(i))
     }
   }
+
+  /** The reference's kept-row loop (`csv.go:160-186`, `json.go:135-153`,
+    * `xml.go:84-127`, `html.go:125-168`): `hook` sees each row with the
+    * 1-based rowID it takes if kept, may rewrite it, and decides whether
+    * to keep it. Pulling from `rows` stops once `limit` rows are kept
+    * (negative: no limit). */
+  def keptRows[A](rows: Iterator[A], hook: Option[(Int, A) => (A, Boolean)],
+                  limit: Int): Iterator[A] = {
+    var kept = 0
+    Iterator.continually(rows).takeWhile(r => (limit < 0 || kept < limit) && r.hasNext)
+      .flatMap { r =>
+        val row = r.next()
+        val (out, keep) = hook.fold((row, true))(_(kept + 1, row))
+        if (keep) { kept += 1; Some(out) } else None
+      }
+  }
+
+  /** The kept rows of a string-cell codec, streamed to the driver one
+    * partition at a time: rendered cells with each NULL replaced by
+    * `nullCell` (`null` keeps it NULL), through [[keptRows]]. Without a hook the first `limit`
+    * rows are the kept ones, so the limit also goes into the query. */
+  def keptCells(df: DataFrame, mappers: Mappers, ctxMappers: CtxMappers,
+                hook: Option[PreProcessor], limit: Int, nullCell: String): Iterator[IndexedSeq[String]] = {
+    val cells = renderedRows(limited(df, if (hook.isEmpty) limit else -1), mappers, ctxMappers)
+      .toLocalIterator().asScala
+      .map(_.toIndexedSeq.map(c => if (c == null) nullCell else c))
+    keptRows(cells, hook, limit)
+  }
+
+  /** Encoded rows framed as one document: `open` waits for the first row,
+    * so no row means `empty`. `limit == 0` writes `empty` without running
+    * the query. */
+  def framed(frame: Frame, limit: Int)(rows: => Iterator[String]): Iterator[String] = {
+    val body = if (limit == 0) Iterator.empty else rows
+    if (!body.hasNext) Iterator.single(frame.empty)
+    else Iterator(frame.open, body.next()) ++ body.map(frame.sep + _) ++ Iterator.single(frame.close)
+  }
+
+  /** Distributed write of encoded rows as one framed document through the
+    * `graft-framed` DSv2 sink. */
+  def writeFramed(rows: Dataset[String], frame: Frame, path: String): Unit =
+    rows.write.format("graft-framed").options(frame.options).mode("overwrite").save(path)
 
   /** Stream an iterator of chunks to a single local file — the
     * `exporter.WriteFile` coordinator (`exporter.go:36-48`): one writer,
@@ -90,61 +159,31 @@ object CsvSink {
       "sequential preProcessor requires the driver-stream path (writeString/writeFile); " +
       "use ops.Pipeline filter/project for distributed writes")
     import SinkIO.stringEnc
-    val limited = if (opts.limit >= 0) df.limit(opts.limit) else df
     val (d, crlf, nv) = (opts.delimiter, opts.useCRLF, opts.nullValue)
-    SinkIO.renderedRows(limited, opts.mappers, opts.ctxMappers).map { cells =>
+    SinkIO.renderedRows(SinkIO.limited(df, opts.limit), opts.mappers, opts.ctxMappers).map { cells =>
       Format.csvLine(cells.toIndexedSeq.map(c => if (c == null) nv else c), d, crlf)
     }
   }
 
+  /** Framing (`csv.go:140-190`): the header opens the document, eagerly
+    * (also for no rows) or lazily (before the first kept row only); every
+    * record ends with the EOL. */
+  private def frame(df: DataFrame, opts: CsvOptions): Frame = {
+    val hdr = header(df, opts)
+    val head =
+      if (opts.writeHeader && hdr.nonEmpty)
+        Format.csvLine(hdr.toIndexedSeq, opts.delimiter, opts.useCRLF) + opts.eol
+      else ""
+    Frame(head, opts.eol, opts.eol, if (opts.writeHeaderWhenNoData) head else "")
+  }
+
   /** Exact reference byte output (header/limit/preprocessor semantics from
     * `csv.go:124-190`), streamed through the driver. */
-  def contentIterator(df: DataFrame, opts: CsvOptions): Iterator[String] = {
-    val hdr = header(df, opts)
-    val eagerHeader = opts.writeHeader && opts.writeHeaderWhenNoData && hdr.nonEmpty
-    val head =
-      if (eagerHeader) Iterator.single(Format.csvLine(hdr.toIndexedSeq, opts.delimiter, opts.useCRLF) + opts.eol)
-      else Iterator.empty
-    if (opts.limit == 0) return head
-
-    val source =
-      if (opts.preProcessor.isEmpty && opts.limit > 0)
-        SinkIO.renderedRows(df.limit(opts.limit), opts.mappers, opts.ctxMappers).toLocalIterator()
-      else SinkIO.renderedRows(df, opts.mappers, opts.ctxMappers).toLocalIterator()
-
-    var rowID = 1
-    var done = false
-    val body = new Iterator[String] {
-      private var pending: Option[String] = None
-      private def advance(): Unit = {
-        while (pending.isEmpty && !done && source.hasNext) {
-          val raw = source.next().toIndexedSeq.map(c => if (c == null) opts.nullValue else c)
-          val (row, keep) = opts.preProcessor match {
-            case Some(f) => f(rowID, raw)
-            case None    => (raw, true)
-          }
-          if (keep) {
-            pending = Some(Format.csvLine(row, opts.delimiter, opts.useCRLF) + opts.eol)
-            if (opts.limit >= 0 && rowID >= opts.limit) done = true
-            rowID += 1
-          }
-        }
-      }
-      def hasNext: Boolean = { advance(); pending.nonEmpty }
-      def next(): String = { advance(); val s = pending.get; pending = None; s }
+  def contentIterator(df: DataFrame, opts: CsvOptions): Iterator[String] =
+    SinkIO.framed(frame(df, opts), opts.limit) {
+      SinkIO.keptCells(df, opts.mappers, opts.ctxMappers, opts.preProcessor, opts.limit, opts.nullValue)
+        .map(Format.csvLine(_, opts.delimiter, opts.useCRLF))
     }
-
-    // lazy header (`csv.go:175-179`): written before the first KEPT row only
-    val lazyHeaderNeeded = opts.writeHeader && !opts.writeHeaderWhenNoData && hdr.nonEmpty
-    if (lazyHeaderNeeded) {
-      val buffered = body.buffered
-      val lazyHead =
-        if (buffered.hasNext)
-          Iterator.single(Format.csvLine(hdr.toIndexedSeq, opts.delimiter, opts.useCRLF) + opts.eol)
-        else Iterator.empty
-      head ++ lazyHead ++ buffered
-    } else head ++ body
-  }
 
   def writeString(df: DataFrame, opts: CsvOptions = CsvOptions()): String =
     contentIterator(df, opts).mkString
@@ -156,14 +195,9 @@ object CsvSink {
     * scale path (header per part-file, quote-doubling like Go). */
   def writeDir(df: DataFrame, path: String, opts: CsvOptions = CsvOptions()): Unit = {
     require(opts.preProcessor.isEmpty, "use ops.Pipeline for distributed writes")
-    val limited = if (opts.limit >= 0) df.limit(opts.limit) else df
-    val renamed = opts.customHeader match {
-      case Some(h) =>
-        if (h.length != df.schema.length)
-          throw new IllegalArgumentException("invalid header length")
-        limited.toDF(h: _*)
-      case None => limited
-    }
+    val limited = SinkIO.limited(df, opts.limit)
+    val renamed =
+      if (opts.customHeader.isDefined) limited.toDF(header(df, opts): _*) else limited
     Render.renderAll(renamed, opts.mappers, opts.ctxMappers).write
       .option("header", opts.writeHeader.toString)
       .option("sep", opts.delimiter.toString)
@@ -182,18 +216,23 @@ object CsvSink {
 /** Option surface of the reference JSON codec (`json.go:28-80`).
   * `preProcessor` is the map-based hook (`json.go:44-48`): it receives
   * the 1-based rowID (counting kept rows) and the row as a
-  * name→native-value map, and runs on the driver-stream path.
-  * `escapeHtml` matches the reference's std-compatible encoder, which
-  * escapes `<>&` inside JSON strings. */
+  * name→native-value map, and runs on the driver-stream path. Strings
+  * escape `<>&` on both paths, like the reference's std-compatible
+  * encoder. */
 final case class JsonOptions(
     newlineDelimited: Boolean = false,
     limit: Int = -1,
     mappers: Mappers = Nil,
     ctxMappers: CtxMappers = Nil,
-    escapeHtml: Boolean = true,
     preProcessor: Option[(Int, Map[String, Any]) => (Map[String, Any], Boolean)] = None)
 
 object JsonSink {
+
+  /** Array-mode framing (`json.go:94-98,135-147`): `[` opens lazily with
+    * the first row, so zero rows → EMPTY output, not `[]`. It is also the
+    * `graft-framed` sink's default. */
+  private[sinks] val arrayFrame = Frame("[\n", ",\n", "\n]\n", "")
+  private val ndjsonFrame = Frame("", "\n", "\n", "")
 
   /** One JSON object per row. Keys are sorted alphabetically — the
     * reference marshals a `map[string]any` with a std-lib-compatible
@@ -204,92 +243,43 @@ object JsonSink {
     require(opts.preProcessor.isEmpty,
       "the map-based preProcessor runs on the driver-stream path (writeString/writeFile)")
     import SinkIO.stringEnc
-    val limited = if (opts.limit >= 0) df.limit(opts.limit) else df
-    val fields = limited.schema.fields.sortBy(_.name)
-    val cols = fields.map { f =>
-      val base = col(f.name)
-      val mapped = opts.ctxMappers.collectFirst {
-        case (dt, fn) if dt == f.dataType =>
-          fn(Render.MapperContext(f.name, graft.sources.SourceMeta.driverOf(f)), base)
-      }.orElse(opts.mappers.collectFirst {
-        case (dt, fn) if dt == f.dataType => fn(base)
-      }).getOrElse {
+    val limited = SinkIO.limited(df, opts.limit)
+    val cols = limited.schema.fields.sortBy(_.name).map { f =>
+      Render.customMapper(f, opts.mappers, opts.ctxMappers).getOrElse {
         f.dataType match {
-          case TimestampType | TimestampNTZType => Render.rfc3339NanoRaw(base)
-          case _ => base
+          case TimestampType | TimestampNTZType => Render.rfc3339NanoRaw(col(f.name))
+          case _ => col(f.name)
         }
-      }
-      mapped.as(f.name)
+      }.as(f.name)
     }
     val j = to_json(struct(cols.toIndexedSeq: _*), Map("ignoreNullFields" -> "false"))
     // `<>&` never appear structurally in JSON, so a global replace only
     // touches string contents — matching the reference encoder exactly
-    val escaped =
-      if (opts.escapeHtml)
-        regexp_replace(regexp_replace(regexp_replace(j,
-          "&", "\\\\u0026"), "<", "\\\\u003c"), ">", "\\\\u003e")
-      else j
+    val escaped = regexp_replace(regexp_replace(regexp_replace(j,
+      "&", "\\\\u0026"), "<", "\\\\u003c"), ">", "\\\\u003e")
     limited.select(escaped.as("j")).as[String]
   }
 
   /** Driver-path objects with the map hook: native-value maps, sorted
     * keys, kept-row rowIDs, std-compatible serialization (GoJson). */
   private def hookedObjects(df: DataFrame, opts: JsonOptions): Iterator[String] = {
-    val hook = opts.preProcessor.get
     // custom mappers apply BEFORE the hook, like `json.go:111-128`
     val mapped = df.select(df.schema.fields.map { f =>
-      opts.ctxMappers.collectFirst { case (dt, fn) if dt == f.dataType =>
-          fn(Render.MapperContext(f.name, graft.sources.SourceMeta.driverOf(f)), col(f.name)) }
-        .orElse(opts.mappers.collectFirst {
-          case (dt, fn) if dt == f.dataType => fn(col(f.name)) })
-        .getOrElse(col(f.name)).as(f.name)
+      Render.customMapper(f, opts.mappers, opts.ctxMappers).getOrElse(col(f.name)).as(f.name)
     }.toIndexedSeq: _*)
-    val schema = mapped.schema
-    val rows = scala.jdk.CollectionConverters
-      .IteratorHasAsScala(mapped.toLocalIterator()).asScala
-    var rowID = 1
-    var emitted = 0
-    val out = rows.flatMap { row =>
-      if (opts.limit >= 0 && emitted >= opts.limit) None
-      else {
-        val m: Map[String, Any] = schema.fields.zipWithIndex.map { case (f, i) =>
-          f.name -> (if (row.isNullAt(i)) null else row.get(i))
-        }.toMap
-        val (rewritten, keep) = hook(rowID, m)
-        if (keep) {
-          rowID += 1; emitted += 1
-          Some(Format.GoJson.writeRow(rewritten))
-        } else None
-      }
+    val names = mapped.schema.fieldNames
+    val rows = mapped.toLocalIterator().asScala.map { row =>
+      names.indices.map(i => names(i) -> (if (row.isNullAt(i)) null else row.get(i))).toMap
     }
-    out
+    SinkIO.keptRows(rows, opts.preProcessor, opts.limit).map(Format.GoJson.writeRow)
   }
 
-  /** Array-mode / NDJSON framing (`json.go:94-98,135-147`): array mode
-    * opens `[` lazily with the first row, so zero rows → EMPTY output,
-    * not `[]`. */
-  def contentIterator(df: DataFrame, opts: JsonOptions = JsonOptions()): Iterator[String] = {
-    if (opts.limit == 0) return Iterator.empty
-    val rows =
+  /** Array-mode or NDJSON document streamed through the driver. */
+  def contentIterator(df: DataFrame, opts: JsonOptions = JsonOptions()): Iterator[String] =
+    SinkIO.framed(if (opts.newlineDelimited) ndjsonFrame else arrayFrame, opts.limit) {
       if (opts.preProcessor.isDefined) hookedObjects(df, opts)
-      else scala.jdk.CollectionConverters
-        .IteratorHasAsScala(objects(df, opts).toLocalIterator()).asScala
-    if (opts.newlineDelimited) rows.map(_ + "\n")
-    else {
-      var first = true
-      val body = rows.map { r =>
-        val s = if (first) "[\n" + r else ",\n" + r
-        first = false
-        s
-      }
-      val close = new Iterator[String] {
-        private var emitted = false
-        def hasNext: Boolean = !emitted && !first
-        def next(): String = { emitted = true; "\n]\n" }
-      }
-      body ++ close
+      else objects(df, opts).toLocalIterator().asScala
     }
-  }
 
   def writeString(df: DataFrame, opts: JsonOptions = JsonOptions()): String =
     contentIterator(df, opts).mkString
@@ -298,10 +288,8 @@ object JsonSink {
     SinkIO.writeFile(path, contentIterator(df, opts))
 
   /** Distributed NDJSON directory write — the scale path. */
-  def writeDir(df: DataFrame, path: String, opts: JsonOptions = JsonOptions()): Unit = {
-    val limited = if (opts.limit >= 0) df.limit(opts.limit) else df
-    objects(limited, opts.copy(limit = -1)).write.mode("overwrite").text(path)
-  }
+  def writeDir(df: DataFrame, path: String, opts: JsonOptions = JsonOptions()): Unit =
+    objects(df, opts).write.mode("overwrite").text(path)
 }
 
 // ---------------------------------------------------------------------------
@@ -317,64 +305,40 @@ final case class XmlOptions(
 
 object XmlSink {
 
+  /** Declaration + `<data>` root written lazily with the first kept row;
+    * zero kept rows → EMPTY output (`xml.go:67-130`). */
+  private val frame = Frame(Format.xmlDeclaration + "\n<data>\n", "\n", "\n</data>\n", "")
+
   /** Distributed `<row>` fragments: NULL elements omitted, values
     * escaped, element names raw (`xml.go:111-122`). */
   def rows(df: DataFrame, opts: XmlOptions = XmlOptions()): Dataset[String] = {
     require(opts.preProcessor.isEmpty, "use ops.Pipeline for distributed writes")
     import SinkIO.stringEnc
-    val limited = if (opts.limit >= 0) df.limit(opts.limit) else df
-    val names = limited.schema.fieldNames.toIndexedSeq
-    SinkIO.renderedRows(limited, opts.mappers, opts.ctxMappers)
+    val names = df.schema.fieldNames.toIndexedSeq
+    SinkIO.renderedRows(SinkIO.limited(df, opts.limit), opts.mappers, opts.ctxMappers)
       .map(cells => Format.xmlRow(names, cells.toIndexedSeq))
   }
 
-  /** Exact reference output (`xml.go:67-130`): declaration + `<data>`
-    * written lazily with the first kept row; zero kept rows → EMPTY
-    * output; limit counts kept rows; limit=0 short-circuits. */
-  def contentIterator(df: DataFrame, opts: XmlOptions = XmlOptions()): Iterator[String] = {
-    if (opts.limit == 0) return Iterator.empty
-    val names = df.schema.fieldNames.toIndexedSeq
-    val source =
-      if (opts.preProcessor.isEmpty && opts.limit > 0)
-        SinkIO.renderedRows(df.limit(opts.limit), opts.mappers, opts.ctxMappers).toLocalIterator()
-      else SinkIO.renderedRows(df, opts.mappers, opts.ctxMappers).toLocalIterator()
+  /** The hook sees NULL cells as "", but NULL omission follows the
+    * ORIGINAL null mask even if the hook rewrote the cell
+    * (`xml.go:94-96,113-115`). */
+  private def keepingNulls(hook: PreProcessor): PreProcessor = (rowID, cells) => {
+    val (row, keep) = hook(rowID, cells.map(c => if (c == null) "" else c))
+    val masked =
+      if (keep) row.zipWithIndex.map { case (s, i) => if (cells(i) == null) null else s }
+      else row
+    (masked, keep)
+  }
 
-    var rowID = 0
-    var done = false
-    var any = false
-    val body = new Iterator[String] {
-      private var pending: Option[String] = None
-      private def advance(): Unit = {
-        while (pending.isEmpty && !done && source.hasNext) {
-          val cells = source.next().toIndexedSeq
-          val strs = cells.map(c => if (c == null) "" else c)
-          val (row, keep) = opts.preProcessor match {
-            case Some(f) => f(rowID + 1, strs)
-            case None    => (strs, true)
-          }
-          if (keep) {
-            // NULL-omission follows the ORIGINAL null mask even if the
-            // preprocessor rewrote the cell (`xml.go:94-96,113-115`)
-            val masked = row.zipWithIndex.map { case (s, i) =>
-              if (cells(i) == null) null else s
-            }
-            val opener = if (!any) Format.xmlDeclaration + "\n<data>\n" else ""
-            any = true
-            pending = Some(opener + Format.xmlRow(names, masked) + "\n")
-            rowID += 1
-            if (opts.limit >= 0 && rowID >= opts.limit) done = true
-          }
-        }
-      }
-      def hasNext: Boolean = { advance(); pending.nonEmpty }
-      def next(): String = { advance(); val s = pending.get; pending = None; s }
+  /** Exact reference output (`xml.go:67-130`); limit counts kept rows;
+    * limit=0 short-circuits. */
+  def contentIterator(df: DataFrame, opts: XmlOptions = XmlOptions()): Iterator[String] = {
+    val names = df.schema.fieldNames.toIndexedSeq
+    SinkIO.framed(frame, opts.limit) {
+      SinkIO.keptCells(df, opts.mappers, opts.ctxMappers,
+        opts.preProcessor.map(keepingNulls), opts.limit, nullCell = null)
+        .map(Format.xmlRow(names, _))
     }
-    val close = new Iterator[String] {
-      private var emitted = false
-      def hasNext: Boolean = !emitted && any && !body.hasNext
-      def next(): String = { emitted = true; "</data>\n" }
-    }
-    body ++ close
   }
 
   def writeString(df: DataFrame, opts: XmlOptions = XmlOptions()): String =
@@ -391,11 +355,7 @@ object XmlSink {
     * order (see DsvWriteSpec). Use this instead of `rows().write.text`
     * when the consumer expects a well-formed XML document. */
   def writeDirFramed(df: DataFrame, path: String, opts: XmlOptions = XmlOptions()): Unit =
-    rows(df, opts).write.format("graft-framed")
-      .option("open", Format.xmlDeclaration + "\n<data>\n")
-      .option("sep", "\n")
-      .option("close", "\n</data>\n")
-      .mode("overwrite").save(path)
+    SinkIO.writeFramed(rows(df, opts), frame, path)
 }
 
 // ---------------------------------------------------------------------------
@@ -432,68 +392,28 @@ object HtmlSink {
   def rows(df: DataFrame, opts: HtmlOptions = HtmlOptions()): Dataset[String] = {
     require(opts.preProcessor.isEmpty, "use ops.Pipeline for distributed writes")
     import SinkIO.stringEnc
-    val limited = if (opts.limit >= 0) df.limit(opts.limit) else df
     val nv = opts.nullValue
-    SinkIO.renderedRows(limited, opts.mappers, opts.ctxMappers)
+    SinkIO.renderedRows(SinkIO.limited(df, opts.limit), opts.mappers, opts.ctxMappers)
       .map(cells => Format.htmlRow(cells.toIndexedSeq.map(c => if (c == null) nv else c)))
   }
 
-  /** Exact reference output (`html.go:96-171`): eager/lazy header,
-    * `<tbody>` with the first kept row, closers depending on what was
-    * written. */
-  def contentIterator(df: DataFrame, opts: HtmlOptions = HtmlOptions()): Iterator[String] = {
-    val hasCols = df.schema.nonEmpty
-    val eagerHeader = opts.writeHeader && opts.writeHeaderWhenNoData && hasCols
-    val head = if (eagerHeader) Iterator.single(headerBlock(df)) else Iterator.empty
-
-    if (opts.limit == 0)
-      return head ++ (if (eagerHeader) Iterator.single("</table></body></html>") else Iterator.empty)
-
-    val source =
-      if (opts.preProcessor.isEmpty && opts.limit > 0)
-        SinkIO.renderedRows(df.limit(opts.limit), opts.mappers, opts.ctxMappers).toLocalIterator()
-      else SinkIO.renderedRows(df, opts.mappers, opts.ctxMappers).toLocalIterator()
-
-    var rowID = 1
-    var done = false
-    var any = false
-    val body = new Iterator[String] {
-      private var pending: Option[String] = None
-      private def advance(): Unit = {
-        while (pending.isEmpty && !done && source.hasNext) {
-          val raw = source.next().toIndexedSeq.map(c => if (c == null) opts.nullValue else c)
-          val (row, keep) = opts.preProcessor match {
-            case Some(f) => f(rowID, raw)
-            case None    => (raw, true)
-          }
-          if (keep) {
-            val lazyHeader =
-              if (opts.writeHeader && rowID == 1 && !opts.writeHeaderWhenNoData && hasCols)
-                headerBlock(df)
-              else ""
-            val tbodyOpen = if (!any) "<tbody>" else ""
-            any = true
-            pending = Some(lazyHeader + tbodyOpen + Format.htmlRow(row))
-            if (opts.limit >= 0 && rowID >= opts.limit) done = true
-            rowID += 1
-          }
-        }
-      }
-      def hasNext: Boolean = { advance(); pending.nonEmpty }
-      def next(): String = { advance(); val s = pending.get; pending = None; s }
-    }
-    val close = new Iterator[String] {
-      private var emitted = false
-      def hasNext: Boolean = !emitted && !body.hasNext
-      def next(): String = {
-        emitted = true
-        if (any) "</tbody></table></body></html>"
-        else if (eagerHeader) "</table></body></html>"
-        else ""
-      }
-    }
-    head ++ body ++ close
+  /** Framing (`html.go:96-171`): the header (when `writeHeader`) and
+    * `<tbody>` open with the first kept row; zero kept rows → header +
+    * closers when the header is eager, EMPTY otherwise — HTML is the one
+    * codec whose no-row output need not be empty. */
+  private def frame(df: DataFrame, opts: HtmlOptions): Frame = {
+    val header = if (opts.writeHeader && df.schema.nonEmpty) headerBlock(df) else ""
+    Frame(header + "<tbody>", "", "</tbody></table></body></html>",
+      if (header.nonEmpty && opts.writeHeaderWhenNoData) header + "</table></body></html>" else "")
   }
+
+  /** Exact reference output (`html.go:96-171`), streamed through the
+    * driver. */
+  def contentIterator(df: DataFrame, opts: HtmlOptions = HtmlOptions()): Iterator[String] =
+    SinkIO.framed(frame(df, opts), opts.limit) {
+      SinkIO.keptCells(df, opts.mappers, opts.ctxMappers, opts.preProcessor, opts.limit, opts.nullValue)
+        .map(Format.htmlRow)
+    }
 
   def writeString(df: DataFrame, opts: HtmlOptions = HtmlOptions()): String =
     contentIterator(df, opts).mkString
@@ -504,24 +424,10 @@ object HtmlSink {
   /** Distributed write WITH the reference's whole-document framing
     * (document+CSS+`<thead>` opener, `<tbody>` wrap, closers), via the
     * DSv2 [[graft.sinks.v2.FramedTextSink]] — the HTML twin of
-    * `XmlSink.writeDirFramed`, closing the last driver-only sink path.
-    * Framing law mirrors [[contentIterator]]: rows exist → header (when
-    * `writeHeader`) + `<tbody>` + raw `<tr>` fragments + closers; zero
-    * rows → header+closers when the header is eager, EMPTY otherwise
-    * (the `empty` option — HTML is the one codec whose empty output is
-    * not empty). Directory files concatenated in name order are
+    * `XmlSink.writeDirFramed`, with the same [[frame]] as
+    * [[contentIterator]]. Directory files concatenated in name order are
     * byte-identical to [[writeString]] when partition order is global
     * order (DsvWriteSpec). */
-  def writeDirFramed(df: DataFrame, path: String, opts: HtmlOptions = HtmlOptions()): Unit = {
-    val hasCols = df.schema.nonEmpty
-    val header = if (opts.writeHeader && hasCols) headerBlock(df) else ""
-    val eagerHeader = opts.writeHeader && opts.writeHeaderWhenNoData && hasCols
-    rows(df, opts).write.format("graft-framed")
-      .option("open", header + "<tbody>")
-      .option("sep", "")
-      .option("close", "</tbody></table></body></html>")
-      .option("empty",
-        if (eagerHeader) header + "</table></body></html>" else "")
-      .mode("overwrite").save(path)
-  }
+  def writeDirFramed(df: DataFrame, path: String, opts: HtmlOptions = HtmlOptions()): Unit =
+    SinkIO.writeFramed(rows(df, opts), frame(df, opts), path)
 }

@@ -12,6 +12,8 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.sinks.{Frame, JsonSink}
+
 /** DataSource V2 WRITE showcase: GLOBALLY-FRAMED text output as a
   * distributed batch sink — `open` + rows joined by `sep` + `close`,
   * and EMPTY output for zero rows.
@@ -30,12 +32,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     global framing down as tiny files whose NAMES interleave
   *     lexicographically with the data files: `a-open`,
   *     `b-<pid>-sep` (after each non-empty part except the last),
-  *     `z-close` — plus `_SUCCESS`. Zero total rows → only `_SUCCESS`.
+  *     `z-close` — plus `_SUCCESS`. Zero total rows → only `_SUCCESS`,
+  *     and `a-open` holding `empty` when that is not "" (HTML's eager
+  *     header).
   *
-  * Options (all optional) default to the reference's JSON-ARRAY format
-  * (`json/json.go:83-156`): `open` = `"[\n"`, `sep` = `",\n"`,
-  * `close` = `"\n]\n"`. The reference XML layout (`xml.go:67-130`) is
-  * the same shape — see `XmlSink.writeDirFramed`.
+  * Options `open`, `sep`, `close` and `empty` (all optional) name the
+  * [[graft.sinks.Frame]]; each one missing defaults to the reference's
+  * JSON-ARRAY frame, `JsonSink`'s own (`json/json.go:83-156`).
+  * `XmlSink.writeDirFramed` and `HtmlSink.writeDirFramed` pass their
+  * codec's frame.
   *
   * The directory's NON-HIDDEN files concatenated in NAME order are
   * byte-identical to the corresponding driver path (`JsonSink.
@@ -60,20 +65,10 @@ class FramedTextSink extends TableProvider with DataSourceRegister {
     require(schema.fields.length == 1 && schema.fields(0).dataType == StringType,
       s"graft-framed expects exactly one string column of pre-rendered " +
         s"rows (use JsonSink.objects / XmlSink.rows); got ${schema.simpleString}")
-    val frame = Frame(
-      Option(properties.get("open")).getOrElse("[\n"),
-      Option(properties.get("sep")).getOrElse(",\n"),
-      Option(properties.get("close")).getOrElse("\n]\n"),
-      Option(properties.get("empty")).getOrElse(""))
-    new FramedTable(properties.get("path"), schema, frame)
+    new FramedTable(properties.get("path"), schema,
+      Frame.fromOptions(properties, JsonSink.arrayFrame))
   }
 }
-
-/** `empty` is the whole-document content for ZERO input rows: "" keeps
-  * the JSON/XML empty→empty law (only `_SUCCESS` lands); HTML's
-  * eager-header law needs header+closers there instead
-  * (`HtmlSink.writeDirFramed`). */
-private case class Frame(open: String, sep: String, close: String, empty: String)
 
 private class FramedTable(path: String, writeSchema: StructType, frame: Frame)
     extends Table with SupportsWrite {
@@ -172,6 +167,7 @@ private class FramedWriter(dir: String, sep: String, pid: Int, taskId: Long,
     extends DataWriter[InternalRow] {
   private var out: org.apache.hadoop.fs.FSDataOutputStream = _
   private var rows = 0L
+  private val sepBytes = sep.getBytes("UTF-8")
   private lazy val fs: FileSystem = {
     val conf = new Configuration(false)
     confMap.foreach { case (k, v) => conf.set(k, v) }
@@ -182,7 +178,7 @@ private class FramedWriter(dir: String, sep: String, pid: Int, taskId: Long,
 
   override def write(record: InternalRow): Unit = {
     if (out == null) out = fs.create(tmpPath, true)
-    else out.write(sep.getBytes("UTF-8"))
+    else out.write(sepBytes)
     out.write(record.getUTF8String(0).getBytes)
     rows += 1
   }
