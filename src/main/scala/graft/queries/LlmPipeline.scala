@@ -2247,8 +2247,10 @@ object LlmPipeline {
         struct($"cos", (-$"cand").as("nc")))).as(s"b$p"))
       val best = perPrn.groupBy($"vec_id")
         .agg(bestCols.head, bestCols.tail: _*)
+      // coalesce: a global sum over no rows is NULL, and empty input
+      // has zero candidates
       val costCols = lvls.map(p =>
-        sum(when($"prn" <= p, 1L).otherwise(0L)).as(s"tc$p"))
+        coalesce(sum(when($"prn" <= p, 1L).otherwise(0L)), lit(0L)).as(s"tc$p"))
       val cost = scored.agg(costCols.head, costCols.tail: _*)
       val j = truth.join(best, Seq("vec_id"), "left")
       val aggCols =

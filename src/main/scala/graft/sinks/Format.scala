@@ -207,17 +207,18 @@ object Format {
     def sparkJsonTs(instant: java.time.Instant): String =
       f"${secondsFmt.format(instant)}.${instant.getNano / 1000000}%03dZ"
 
+    private val ntzSecondsFmt = java.time.format.DateTimeFormatter
+      .ofPattern("yyyy-MM-dd'T'HH:mm:ss")
+
     /** `to_json`'s default TimestampNTZ rendering: exactly 3 fraction
       * digits and no zone suffix (a naive wall-clock value). */
     def sparkJsonTsNtz(ldt: java.time.LocalDateTime): String =
-      f"${ldt.format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss"))}.${ldt.getNano / 1000000}%03d"
+      f"${ldt.format(ntzSecondsFmt)}.${ldt.getNano / 1000000}%03d"
 
-    def rfc3339NanoInstant(instant: java.time.Instant): String = {
-      val base = secondsFmt.format(instant)
-      val nanos = instant.getNano
-      if (nanos == 0) base + "Z"
-      else base + "." + f"$nanos%09d".reverse.dropWhile(_ == '0').reverse + "Z"
-    }
+    /** RFC3339Nano in UTC from the same kernel as the distributed path
+      * ([[graft.functions.GoTime]]), with up to 9 fraction digits. */
+    def rfc3339NanoInstant(instant: java.time.Instant): String =
+      graft.functions.GoTime.rfc3339Utc(instant)
 
     /** std-JSON string escaping incl. the HTML set (`<>&` → \u00XX). */
     def quote(s: String): String = {

@@ -8,7 +8,9 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.Render
+import org.apache.spark.sql.graft.ColumnBridge
+
+import graft.functions.{GoJsonEscapeHtml, Render}
 
 /** Sequential row hook, Go-shaped (`csv.go:67-71` etc.): receives the
   * 1-based rowID (counting KEPT rows) and the rendered row; returns the
@@ -253,10 +255,7 @@ object JsonSink {
       }.as(f.name)
     }
     val j = to_json(struct(cols.toIndexedSeq: _*), Map("ignoreNullFields" -> "false"))
-    // `<>&` never appear structurally in JSON, so a global replace only
-    // touches string contents — matching the reference encoder exactly
-    val escaped = regexp_replace(regexp_replace(regexp_replace(j,
-      "&", "\\\\u0026"), "<", "\\\\u003c"), ">", "\\\\u003e")
+    val escaped = ColumnBridge.column(GoJsonEscapeHtml(ColumnBridge.expression(j)))
     limited.select(escaped.as("j")).as[String]
   }
 

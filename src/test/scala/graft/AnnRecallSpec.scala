@@ -149,4 +149,18 @@ class AnnRecallSpec extends SparkTestBase {
         r.getAs[Long]("n_hits") * 1000000L / nq)
     }
   }
+
+  test("d39: empty input gives zero candidates at every nprobe") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_d39_empty").toString
+    spark.read.parquet(s"$sf0001/embeddings.parquet").limit(0)
+      .write.parquet(s"$dir/embeddings.parquet")
+    val rows = graft.SparkEntry.queries("d39_ivf_probe_sweep")(spark, dir)
+      .collect().sortBy(_.getAs[Long]("nprobe"))
+    assert(rows.map(_.getAs[Long]("nprobe")).toSeq == Seq(1L, 2L, 4L, 8L))
+    rows.foreach { r =>
+      assert(r.getAs[Long]("n_queries") == 0L)
+      assert(!r.isNullAt(r.fieldIndex("total_candidates")), s"NULL cost in $r")
+      assert(r.getAs[Long]("total_candidates") == 0L)
+    }
+  }
 }
